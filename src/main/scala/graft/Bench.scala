@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark runner: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line for the driver. A crashing query is reported in an
@@ -20,24 +20,80 @@ import org.apache.spark.sql.SparkSession
   * from a just-finished run decays through the threshold during the settle
   * window and is not flagged). */
 object Bench {
+
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in an error message or oracle SQL text would
+    * otherwise make the consumer's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Untimed warmup: pay JVM/codegen/parquet-reader startup once so the
+    * first timed query doesn't absorb it. entry() is the Q1-shape query on
+    * sf0.001 (scan + broadcast join + agg); the range round-trips warm
+    * (a) shuffle + window machinery and (b) the interpreted
+    * higher-order-function evaluator + regex split + explode (the
+    * text/dedup tier's hot paths — without this the first lt or ld query
+    * absorbs several seconds of their JIT compilation). A failure is
+    * reported on stderr (stdout carries the JSON contract). */
+  def warmUp(spark: SparkSession): Unit =
+    try {
+      noop(SparkEntry.entry(spark))
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions._
+      noop(spark.range(100000).withColumn("g", col("id") % 100)
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("g").orderBy(col("id").desc)))
+        .groupBy("g").agg(sum("rn")))
+      noop(spark.range(20000)
+        .selectExpr(
+          "transform(sequence(0, 63), i -> CAST(id + i AS DOUBLE)) AS arr",
+          "concat(CAST(id AS STRING), ' the a of and to in x, y. z!') AS s")
+        .selectExpr(
+          "aggregate(zip_with(arr, arr, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x) AS dp",
+          "filter(split(regexp_replace(s, '([.,!?;:])', ' $1 '), '\\\\s+'), t -> t <> '') AS toks")
+        .selectExpr("dp", "size(array_distinct(toks)) AS nd", "explode(toks) AS t")
+        .groupBy("t").agg(count(lit(1)), sum("dp"), sum("nd")))
+      // sketch/sort-based aggregate paths (HLL++, exact percentile): these
+      // JIT lazily and otherwise land inside whichever timed query touches
+      // them first (alphabetically a11/a15)
+      noop(spark.range(100000).withColumn("g", col("id") % 3)
+        .groupBy("g")
+        .agg(approx_count_distinct(col("id"), 0.005),
+          percentile(col("id"), lit(0.5))))
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] WARMUP FAILED (timings will include " +
+          s"startup): ${Option(e.getMessage).getOrElse(e.getClass.getName)}")
+    }
+
+  /** One timed run: build `query` and execute it into the noop sink;
+    * returns seconds. The tier's internal caches are released afterwards
+    * (untimed, also on failure): a query x k run must not accumulate dead
+    * cached RDDs from the dedup tier's internal persists, and no run may
+    * ride a previous run's cache. */
+  def timedRun(spark: SparkSession)(query: => DataFrame): Double =
+    try {
+      val t0 = System.nanoTime()
+      noop(query)
+      (System.nanoTime() - t0) / 1e9
+    } finally graft.llm.Caches.releaseAll(spark)
+
+  private def noop(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runsPerQuery =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val loadMax = sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX", "4.0").toDouble
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    val spark = GraftSession.fromEnv(logLevel = "ERROR")
 
     def loadAvg1: Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")(0).toDouble
@@ -71,46 +127,7 @@ object Bench {
       if (s >= 0) loadStart = if (loadStart < 0) s else math.min(loadStart, s)
     }
 
-    // Untimed warmup: pay JVM/codegen/parquet-reader startup once here so
-    // the alphabetically-first timed query doesn't absorb it. entry() is the
-    // Q1-shape query on sf0.001 (scan + broadcast join + agg); the range
-    // round-trips warm (a) shuffle + window machinery and (b) the
-    // interpreted higher-order-function evaluator + regex split + explode
-    // (the text/dedup tier's hot paths — without this the first lt*/ld*
-    // query absorbs several seconds of their JIT compilation).
-    try {
-      SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      spark.range(100000).withColumn("g", col("id") % 100)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("g").orderBy(col("id").desc)))
-        .groupBy("g").agg(sum("rn")).write.mode("overwrite").format("noop").save()
-      spark.range(20000)
-        .selectExpr(
-          "transform(sequence(0, 63), i -> CAST(id + i AS DOUBLE)) AS arr",
-          "concat(CAST(id AS STRING), ' the a of and to in x, y. z!') AS s")
-        .selectExpr(
-          "aggregate(zip_with(arr, arr, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x) AS dp",
-          "filter(split(regexp_replace(s, '([.,!?;:])', ' $1 '), '\\\\s+'), t -> t <> '') AS toks")
-        .selectExpr("dp", "size(array_distinct(toks)) AS nd", "explode(toks) AS t")
-        .groupBy("t").agg(count(lit(1)), sum("dp"), sum("nd"))
-        .write.mode("overwrite").format("noop").save()
-      // sketch/sort-based aggregate paths (HLL++, exact percentile): these
-      // JIT lazily and otherwise land inside whichever timed query touches
-      // them first (alphabetically a11/a15)
-      spark.range(100000).withColumn("g", col("id") % 3)
-        .groupBy("g")
-        .agg(approx_count_distinct(col("id"), 0.005),
-          percentile(col("id"), lit(0.5)))
-        .write.mode("overwrite").format("noop").save()
-    } catch {
-      case e: Throwable =>
-        // Warmup failure means the first timed query silently re-absorbs
-        // startup cost — surface it (stderr; stdout is the JSON contract).
-        System.err.println(s"[bench] WARMUP FAILED (timings will include " +
-          s"startup): ${Option(e.getMessage).getOrElse(e.getClass.getName)}")
-    }
+    warmUp(spark)
 
     var errors = List.empty[(String, String)]
     // Per query: up to runsPerQuery timed executions (stop at first failure),
@@ -121,21 +138,12 @@ object Bench {
       var failed = false
       var run = 0
       while (run < runsPerQuery && !failed) {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          times += (System.nanoTime() - t0) / 1e9
-        } catch {
+        try times += timedRun(spark)(fn(spark, sfDir))
+        catch {
           case e: Throwable =>
             failed = true
             errors ::= name ->
               Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        } finally {
-          // Per-query-run cache hygiene (untimed): a 75-query x k run must
-          // not accumulate dead cached RDDs from the dedup tier's internal
-          // persists — harmless at 128 GiB, eviction thrash beyond. Also
-          // keeps runs independent: no run rides a previous run's cache.
-          graft.llm.Caches.releaseAll(spark)
         }
         run += 1
       }
@@ -146,11 +154,11 @@ object Bench {
       if (times.nonEmpty && !failed) Some(name -> times.toVector) else None
     }
     val mins = results.map { case (k, v) => k -> v.min }
-    val qs = mins.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val qs = mins.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
     val allRuns = results.map { case (k, v) =>
-      s"${jstr(k)}:${v.mkString("[", ",", "]")}"
+      s"${jsonString(k)}:${v.mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
     val total = mins.map(_._2).sum
     val loadEnd = loadAvg1
     // Only the START load can indict the snapshot — by the end the bench's

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Apply engine defaults to any builder (used by Verify, Bench, tests). */
+  /** Apply engine defaults to any builder (used by [[fromEnv]], tests). */
   def configure(b: SparkSession.Builder, shufflePartitions: Int = 32): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
@@ -47,6 +47,33 @@ object GraftSession {
       // timestamp type.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+
+  /** Session for the command-line entry points (Bench, Verify, StageProbe,
+    * ScaleGen): `local[SPARK_GRAFT_CPUS]` (default: every available core)
+    * with that many shuffle partitions, then the optional dev confs in
+    * `GRAFT_CONF="k=v;k=v"` (unset = engine defaults). */
+  def fromEnv(logLevel: String): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = configure(SparkSession.builder().master(s"local[$cpus]"),
+      shufflePartitions = cpus).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    parseConf(sys.env.getOrElse("GRAFT_CONF", ""))
+      .foreach { case (k, v) => spark.conf.set(k, v) }
+    spark
+  }
+
+  /** `k=v;k2=v2` → ordered (key, value) pairs. Empty segments are skipped;
+    * the value is everything after the first `=`. An entry with no `=` or
+    * an empty key is rejected by name rather than silently dropped. */
+  def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(';').toSeq.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"GRAFT_CONF entry '$kv' is not of the form key=value")
+      }
+    }
 
   /** Local session for tests / ad-hoc runs. */
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve tooling: derive a larger scale factor from the driver's
   * testdata by key-shifted replication, then time the heavy tier across
-  * scale factors in one JVM (`graft.ScaleRun`). The derived data is for
-  * WALL-TIME SLOPE measurement only — correctness stays pinned at the
-  * driver's own SFs by Verify/check_correctness.
+  * scale factors in one JVM (`graft.StageProbe <dir1,dir2,...> ...`). The
+  * derived data is for WALL-TIME SLOPE measurement only — correctness
+  * stays pinned at the testdata's own SFs by Verify/check_correctness.
   *
   * Replication preserves each workload's per-replica structure exactly:
   *  - `documents`: EVERY replica (r = 0 included) suffixes every
@@ -159,11 +159,7 @@ object ScaleGen {
         s"scalegen: unknown embed mode '${args(3)}' (verbatim|jitter)")
       args(3) == "jitter"
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(logLevel = "WARN")
     new java.io.File(out).mkdirs()
 
     def replicate(t: String, key: String)(perReplica: (DataFrame, Int, Long) => DataFrame): Unit = {
@@ -220,35 +216,6 @@ object ScaleGen {
     println(s"[scalegen] lineitem x$replicas -> ${liAll.count()} rows")
     Seq("region", "nation", "customer", "supplier").foreach { t =>
       spark.read.parquet(s"$src/$t.parquet").write.mode("overwrite").parquet(s"$out/$t.parquet")
-    }
-    spark.stop()
-  }
-}
-
-/** Time a comma-separated query list over comma-separated sf dirs in ONE
-  * JVM: `runMain graft.ScaleRun <dir1,dir2,...> <q1,q2,...> [repeat]`.
-  * Prints one line per (dir, query, run); judge by the min run (run 1 is
-  * JIT-cold). Matches Bench's cache hygiene between runs. */
-object ScaleRun {
-  def main(args: Array[String]): Unit = {
-    val dirs = args(0).split(",").map(_.trim).filter(_.nonEmpty)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val repeat = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    for (dir <- dirs; name <- names) {
-      val times = (1 to repeat).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.llm.Caches.releaseAll(spark)
-        dt
-      }
-      println(f"[scalerun] dir=$dir q=$name min=${times.min}%.2f s runs=" +
-        times.map(t => f"$t%.2f").mkString(","))
     }
     spark.stop()
   }

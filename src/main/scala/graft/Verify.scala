@@ -1,27 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the external DuckDB compare. Dev stress runs
+  * may set session confs through GRAFT_CONF (see [[GraftSession.fromEnv]]),
+  * e.g. forcing the scan fanout on every table so the oracle exercises
+  * that path at small SFs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional session confs for dev stress runs (e.g. forcing the scan
-    // fanout on every table so the oracle exercises that path at small
-    // SFs): GRAFT_CONF="k=v;k=v". Unset (the driver's mode) = defaults.
-    sys.env.get("GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    val spark = GraftSession.fromEnv(logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // Dev subset: SPARK_GRAFT_ONLY=q1,q2 restricts both the parquet dump
     // and the oracle manifest, so tools/check_correctness.py validates just
@@ -37,20 +26,9 @@ object Verify {
       }
       finally graft.llm.Caches.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -20,8 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scope contract: the registry is JVM-global, not session- or
   * thread-scoped — [[release]] drains EVERY tracked frame. Sequential
-  * pipelines (the engine's Bench/Verify/RunOne loops, a driver running
-  * one curation job at a time) get exact lifecycle management for free;
+  * pipelines (the engine's Bench/Verify/StageProbe loops, an application
+  * running one curation job at a time) get exact lifecycle management for
+  * free;
   * CONCURRENT pipelines sharing a JVM must coordinate (release only at a
   * boundary where no tracked pipeline is still consuming its plan, or
   * serialize the pipelines) — an interleaved release would unpersist a
@@ -32,33 +33,13 @@ object Caches {
   private val tracked = new ConcurrentLinkedQueue[DataFrame]()
   private val trackedCkpt = new ConcurrentLinkedQueue[DataFrame]()
 
-  /** Persist `df` and register it for the next [[release]]. */
+  /** Persist `df` LAZILY and register it for the next [[release]]. Lazy
+    * beat an eager count() at every multi-consumer site in a same-build
+    * A/B on both 8 and 32 cores (lg1 1.89 s vs 3.35 s): the block manager
+    * locks a cached partition while its first task computes it, so
+    * concurrent consumers wait and reuse rather than recompute. */
   private[graft] def persist(df: DataFrame): DataFrame = {
     tracked.add(df.persist())
-    df
-  }
-
-  /** [[persist]] with OPT-IN eager materialization (one count() job) for
-    * multi-consumer caches — `graft.caches.eager=true`; LAZY by default.
-    *
-    * History: r14 first converted these sites to unconditional eager on a
-    * stage-probe reading that concurrent first consumers of a lazy cache
-    * recompute the cached subtree once per leaf path. A same-build A/B
-    * through this seam then showed the opposite on BOTH core counts
-    * (32 cpus: ls16 2.07 eager vs 1.68 lazy, lt50 1.75 vs 1.39, bgeo 3.23
-    * vs 2.82; 8 cpus: lg1 3.35 vs 1.89) — the block manager LOCKS a cached
-    * partition while the first task computes it, so concurrent consumers
-    * block-and-reuse rather than recompute (the "duplicate stage CPU" in
-    * the probes was lock-wait billed as executor run time), while the
-    * eager count() is a real extra sequential barrier per site. Lazy is
-    * therefore the measured default; the seam stays so any site (or a
-    * saturated-cluster deployment, where overlapping the cache build with
-    * other leaf work may no longer be free) can re-elect eager with one
-    * conf and re-measure. */
-  private[graft] def persistEager(df: DataFrame): DataFrame = {
-    tracked.add(df.persist())
-    if (df.sparkSession.conf.get("graft.caches.eager", "false").toBoolean)
-      df.count(): Unit
     df
   }
 
@@ -116,15 +97,15 @@ object Caches {
       case _ => ()
     }
 
-  /** Harness variant ([[graft.Bench]]/[[graft.Verify]]/[[graft.RunOne]] call
-    * this between queries): [[release]] plus the tier's TRACKED
-    * localCheckpoint storage (e.g. the final labels frame that truncates
-    * `dedupClusters`' iteration lineage, which belongs to the already
-    * consumed and discarded result plan). Scoped to frames this registry
-    * tracked — a host application's own persists are never touched, so a
-    * registered query that legitimately caches its own frame across two
-    * actions keeps it. Callers should treat the consumed result frame as
-    * dead afterwards (its checkpoint cannot recompute). */
+  /** Harness variant ([[graft.Bench]], [[graft.Verify]] and
+    * [[graft.StageProbe]] call this between queries): [[release]] plus the
+    * tier's TRACKED localCheckpoint storage (e.g. the final labels frame
+    * that truncates `dedupClusters`' iteration lineage, which belongs to
+    * the already consumed and discarded result plan). Scoped to frames
+    * this registry tracked — a host application's own persists are never
+    * touched, so a registered query that legitimately caches its own frame
+    * across two actions keeps it. Callers should treat the consumed result
+    * frame as dead afterwards (its checkpoint cannot recompute). */
   def releaseAll(spark: SparkSession): Unit = {
     release()
     var df = trackedCkpt.poll()

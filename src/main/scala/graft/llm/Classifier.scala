@@ -55,11 +55,9 @@ object Classifier {
       (pmod(Dedup.md5Hash60(col(idCol).cast("string")), lit(testMod.toLong)) === 0L)
         .as("is_test"),
       explode(TextOps.tokens(col(textCol))).as("tok"))
-    // one corpus scan -> doc-scoped count table; EAGER because its three
-    // consumers (model, totals, test scoring) land in ONE action whose
-    // concurrent leaf stages each recomputed the tokenize+explode subtree
-    // when the cache was lazy
-    val docTf = Caches.persistEager(
+    // one corpus scan -> doc-scoped count table, persisted for its three
+    // consumers (model, totals, test scoring)
+    val docTf = Caches.persist(
       base.groupBy("doc_id", "y", "is_test", "tok").agg(count(lit(1)).as("m")))
 
     val train = docTf.filter(!col("is_test"))

@@ -445,32 +445,14 @@ object Dedup {
 
   /** MinHash signature from 64-bit-hashed shingle rows (`sh` column):
     * numHashes independent min-hashes, each min over xxhash64(seed_i, sh),
-    * computed by [[MinHashSigAgg]]'s one-loop fold (or, with session conf
-    * `graft.minhash.declarative=true`, the original per-hash aggregate
-    * spelling — the A/B seam MinHashAggSpec pins equal). Output schema is
-    * identical either way: (doc_id, mh0 .. mh{n-1}). */
+    * computed by [[MinHashSigAgg]]'s one-loop fold. Output schema:
+    * (doc_id, mh0 .. mh{n-1}). */
   private[graft] def minhashSignatureHashed(hashed: DataFrame, numHashes: Int): DataFrame = {
-    val declarative = hashed.sparkSession.conf
-      .get("graft.minhash.declarative", "false").toBoolean
-    if (declarative) {
-      val mins = (0 until numHashes).map(i =>
-        min(xxhash64(lit(i), col("sh"))).as(s"mh$i"))
-      hashed.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-    } else {
-      val sig = udaf(new MinHashSigAgg(numHashes))
-      hashed.groupBy("doc_id").agg(sig(col("sh")).as("__mhs"))
-        .select(col("doc_id") +:
-          (0 until numHashes).map(i => col("__mhs")(i).as(s"mh$i")): _*)
-    }
+    val sig = udaf(new MinHashSigAgg(numHashes))
+    hashed.groupBy("doc_id").agg(sig(col("sh")).as("__mhs"))
+      .select(col("doc_id") +:
+        (0 until numHashes).map(i => col("__mhs")(i).as(s"mh$i")): _*)
   }
-
-  /** MinHash signature per doc from a (doc_id, shingle) string table —
-    * hashes shingles to 64 bits first (re-seeded mixes of a 64-bit value
-    * are as valid a min-hash family as mixes of the string, and every
-    * downstream shuffle then carries longs). */
-  def minhashSignature(shingles: DataFrame, numHashes: Int): DataFrame =
-    minhashSignatureHashed(
-      shingles.select(col("doc_id"), xxhash64(col("shingle")).as("sh")), numHashes)
 
   /** Banded-LSH candidate pairs from a minhash signature table:
     * bands of `rowsPerBand` hashes each; docs agreeing on all hashes of any
@@ -517,11 +499,8 @@ object Dedup {
       maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
     // internal frame (three longs per row), cached for its three consumers
     // (signature, confirm sides); released via Caches.release() — same
-    // lifecycle and size semantics as jaccardPairs. EAGER: the consumers'
-    // leaf stages launch concurrently under AQE, and a lazy cache let all
-    // of them recompute the scan+shingle+hash subtree (measured: 8
-    // duplicate ~400 ms stages at sf0.1 — k corpus scans at 100 TB).
-    val sh = capByDf(Caches.persistEager(hashedWithSize(
+    // lifecycle and size semantics as jaccardPairs.
+    val sh = capByDf(Caches.persist(hashedWithSize(
       shingleTable(docs, idCol, textCol, shingleN))), "sh", maxShingleDf)
     val cand = lshCandidates(minhashSignatureHashed(sh, numHashes), numHashes, rowsPerBand)
     val a = sh.select(col("doc_id").as("d1"), col("sh").as("s1"), col("n_sh").as("n1"))

@@ -41,13 +41,10 @@ object GraphOps {
     // The edge list is consumed 2·iters+2 times (node derivation, degrees,
     // and one join per iteration); deriving it from an expensive upstream
     // (here: the Jaccard shingle self-join) would recompute that upstream
-    // once per consumer. EAGER: the first action below (nodes.count) reads
-    // the edge frame through BOTH union legs, and AQE launches those leaf
-    // stages concurrently — a lazy cache let each leg recompute the whole
-    // upstream pair pipeline (measured on lg1 at sf0.1: 6.3 s of duplicate
-    // CPU in the node-derivation stage). Tracked in Caches, released by
+    // once per consumer (the first action below, nodes.count, reads the
+    // edge frame through BOTH union legs). Tracked in Caches, released by
     // the harness after the action.
-    val e = Caches.persistEager(edges.select(col("src").cast("long").as("src"),
+    val e = Caches.persist(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")))
     val nodes = Caches.persist(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
@@ -171,19 +168,17 @@ object GraphOps {
     * by exactness — orientation changes where a triangle is counted,
     * never whether). */
   def triangleCount(pairs: DataFrame): DataFrame = {
-    // Two EAGER caches, materialized in sequence, so the (expensive) pair
-    // pipeline runs exactly once: orientByDegree alone reads its input
-    // through three leaf paths (edge projection + the degree union's two
-    // legs), and the wedge build below reads the oriented table through
-    // four (e1/e2/e3 + the node union) — lazily cached, AQE's concurrent
-    // leaf stages recomputed the upstream once per path.
-    val p = Caches.persistEager(pairs.select(
+    // Two caches, so the (expensive) pair pipeline runs exactly once:
+    // orientByDegree alone reads its input through three leaf paths (edge
+    // projection + the degree union's two legs), and the wedge build below
+    // reads the oriented table through four (e1/e2/e3 + the node union).
+    val p = Caches.persist(pairs.select(
       col("a").cast("long").as("a"), col("b").cast("long").as("b")))
     // pinned to src (the dedupClusters discipline): the wedge build reads
     // the oriented table twice on src and the closing-edge probe clusters
     // on (src, dst), which a src partitioning already satisfies — all
     // three join sides read the cache exchange-free
-    val e = Caches.persistEager(orientByDegree(p)
+    val e = Caches.persist(orientByDegree(p)
       .repartition(
         pairs.sparkSession.sessionState.conf.numShufflePartitions,
         col("src")))
@@ -231,11 +226,10 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, iters: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     import org.apache.spark.sql.expressions.Window
-    // EAGER for the same reason as pagerank: round 0's checkpoint reads
-    // the edge frame through THREE concurrent leaf paths (the vote join
-    // plus the node seed's two union legs), and a lazy cache let each
-    // recompute the upstream pair pipeline from scratch.
-    val e = Caches.persistEager(edges.select(col("src").cast("long").as("src"),
+    // persisted for the same reason as pagerank: round 0's checkpoint
+    // reads the edge frame through THREE leaf paths (the vote join plus
+    // the node seed's two union legs).
+    val e = Caches.persist(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")))
     // nodes has exactly ONE consumer (the l0 seed below — the self-votes
     // carry every node through later rounds), so unlike pagerank's

@@ -28,8 +28,8 @@ object Keywords {
   def tfidfKeywords(
       docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // EAGER: df / nd / the scoring join consume docTf inside one action
-    val docTf = Caches.persistEager(docs
+    // persisted: df / nd / the scoring join consume docTf inside one action
+    val docTf = Caches.persist(docs
       .select(col(idCol).cast("long").as("doc_id"),
         explode(TextOps.tokens(col(textCol))).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
@@ -75,8 +75,8 @@ object Keywords {
       docs: DataFrame, idCol: String, textCol: String,
       minPair: Long, k: Int, maxDocTokens: Int = 100000): DataFrame = {
     require(k >= 1 && minPair >= 1, s"pmiPairs: need k/minPair >= 1")
-    // EAGER: the pair self-join's two sides + the marginals all read dt
-    val dt = Caches.persistEager(docs
+    // persisted: the pair self-join's two sides + the marginals all read dt
+    val dt = Caches.persist(docs
       .select(col(idCol).cast("long").as("doc_id"),
         explode(array_distinct(TextOps.tokens(col(textCol)))).as("tok"))
       .withColumn("nt", count(lit(1)).over(Window.partitionBy("doc_id")))

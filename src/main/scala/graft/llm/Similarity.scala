@@ -1253,8 +1253,7 @@ object Similarity {
     * collected. Output: d1 < d2, cosine >= minCos. */
   def cellBlockedNearDups(
       vecs: DataFrame, idCol: String, embCol: String, minCos: Double,
-      kCells: Int = 0, nprobe: Int = 2, dims: Int = 64,
-      probe: Boolean = false): DataFrame = {
+      kCells: Int = 0, nprobe: Int = 2, dims: Int = 64): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     require(kCells >= 0 && nprobe >= 1 && (kCells == 0 || nprobe <= kCells),
@@ -1286,11 +1285,6 @@ object Similarity {
       .select(col("id"), col("e"), col("nrm"),
         explode(col("cells")).as("c"))
       .select(col("id"), col("e"), col("nrm"), col("c").cast("long").as("cell"))
-    if (probe) {
-      val occ = members.groupBy("cell").count()
-        .agg(max("count"), sum(expr("count * (count - 1) / 2"))).collect()(0)
-      println(s"[flat] max cell occupancy: ${occ.get(0)}, raw pair upper bound: ${occ.get(1)}")
-    }
     groupLocalConfirm(members, minCos)
   }
 
@@ -1626,26 +1620,15 @@ object Similarity {
     * window over the L1-keyed exchange. */
   def treeBlockedNearDups(
       vecs: DataFrame, idCol: String, embCol: String, minCos: Double,
-      nprobe: Int = 2, dims: Int = 64, kTree: Int = 0,
-      probe: Boolean = false): DataFrame = {
+      nprobe: Int = 2, dims: Int = 64, kTree: Int = 0): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     require(nprobe >= 1, s"treeBlockedNearDups: bad nprobe=$nprobe")
-    // dev diagnostic (ProbeTree): staged wall/cardinality prints on the
-    // SAME frames the operator returns — never on in Verify/Bench
-    def timed[T](label: String)(f: => T): T =
-      if (!probe) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[tree] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     val corpusQ = vecs
       .select(col(idCol).cast("long").as("id"), quantize(col(embCol)).as("e"))
       .as[(Long, Array[Long])]
     val k = if (kTree > 0) kTree else deriveTreeK(corpusQ.count())
-    if (probe) println(s"[tree] k=$k")
-    val cents1 = timed("trainL1")(trainCellCentroids(corpusQ, k, dims))
+    val cents1 = trainCellCentroids(corpusQ, k, dims)
     val bc1 = spark.sparkContext.broadcast(cents1)
     // one pass attaches norm + home L1 cell; persisted for its four
     // consumers (L2 seed election, L2 training, final probing, scoring)
@@ -1660,12 +1643,12 @@ object Similarity {
     // L2 seeds: each L1 cell's k smallest members (rank = sub-cell id) —
     // one window on the L1-keyed exchange, then a bounded collect
     // (≤ k² ≤ 65536 rows by the deriveTreeK cap)
-    val seedRows = timed("seedsL2")(prep
+    val seedRows = prep
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("c1").orderBy("id")))
       .filter(col("rn") <= k)
       .select(col("c1"), (col("rn") - 1).cast("int").as("c2"), col("e"))
-      .as[(Int, Int, Array[Long])].collect())
+      .as[(Int, Int, Array[Long])].collect()
     val seedMap = seedRows.groupBy(_._1).map { case (c1, rows) =>
       c1 -> rows.sortBy(_._2).map { case (_, c2, e) => withNorm(c2, e) }
     }
@@ -1682,7 +1665,6 @@ object Similarity {
       }.toDF("c1", "c2", "q")
       .groupBy("c1", "c2").agg(vecsum(col("q")).as("s"))
       .as[(Int, Int, Array[Long])].collect()
-    if (probe) println(s"[tree] l2 centroids: ${cents2.length}")
     val cents2Map = cents2.groupBy(_._1).map { case (c1, rows) =>
       c1 -> rows.sortBy(_._2).map { case (_, c2, s) => withNorm(c2, s) }
     }
@@ -1703,12 +1685,6 @@ object Similarity {
           }
         }
       }.toDF("id", "e", "nrm", "cell")
-    if (probe) {
-      println(s"[tree] buckets: ${timed("buckets.count")(buckets.count())}")
-      val occ = buckets.groupBy("cell").count()
-        .agg(max("count"), sum(expr("count * (count - 1) / 2"))).collect()(0)
-      println(s"[tree] max cell occupancy: ${occ.get(0)}, raw pair upper bound: ${occ.get(1)}")
-    }
     groupLocalConfirm(buckets, minCos)
   }
 
@@ -1842,7 +1818,7 @@ object Similarity {
     // consume it.
     // len must be LONG before it meets the ppm constants: size() is an
     // int, and 750000 * int wraps under ANSI before the widening can help
-    val tf = Caches.persistEager(toks
+    val tf = Caches.persist(toks
       .select(col("doc_id"), size(col("t")).cast("long").as("len"),
         explode(col("t")).as("w"))
       .groupBy("doc_id", "len", "w").agg(count(lit(1)).as("tf")))
@@ -1851,7 +1827,7 @@ object Similarity {
     // Persisted: the one-row frame has two consumers (wq's idf floor and
     // the avgdl projection), and each would otherwise re-run the full
     // tokenize(+ngram) corpus scan that feeds the aggregate.
-    val stats = Caches.persistEager(toks.agg(count(lit(1)).cast("long").as("n"),
+    val stats = Caches.persist(toks.agg(count(lit(1)).cast("long").as("n"),
       sum(size(col("t"))).cast("long").as("sumlen")))
     val qids = broadcast(queries.select(col(idCol).cast("long").as("query_id")))
     val qp = tf.join(qids, col("doc_id") === col("query_id"))

@@ -32,9 +32,9 @@ object Sketches {
       depth: Int = 4, width: Int = 64, topK: Int = 10): DataFrame = {
     require(depth >= 1 && width >= 1 && topK >= 1,
       s"depth/width/topK must be >= 1, got $depth/$width/$topK")
-    // EAGER: counters and the exact-top-k tail consume tc inside one
-    // action (concurrent leaf stampede on the tokenize+count subtree)
-    val tc = Caches.persistEager(docs
+    // persisted: counters and the exact-top-k tail consume tc inside one
+    // action
+    val tc = Caches.persist(docs
       .select(explode(TextOps.tokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n")))
     val hh = tc

@@ -57,10 +57,9 @@ object Surprisal {
         when(col("p0") === 0, lit("")).otherwise(
           element_at(col("__toks"), col("p0"))).as("prev"),
         col("cur"))
-    // EAGER: the bigram table feeds the corpus-model chain AND the
-    // per-doc join, whose leaf stages launch concurrently under AQE — a
-    // lazy cache let both recompute the tokenize+posexplode subtree.
-    val docBg = Caches.persistEager(
+    // persisted: the bigram table feeds the corpus-model chain AND the
+    // per-doc join.
+    val docBg = Caches.persist(
       occ.groupBy("doc_id", "prev", "cur").agg(count(lit(1)).as("m")))
     val bg = docBg.groupBy("prev", "cur").agg(sum(col("m")).as("cbg"))
     val ctx = bg.groupBy("prev").agg(sum(col("cbg")).as("cprev"))
@@ -116,12 +115,12 @@ object Surprisal {
         when(col("p0") === 0, lit("")).otherwise(
           element_at(col("__toks"), col("p0"))).as("prev"),
         col("cur"))
-    // EAGER ×2 (same stampede note as bigramSurprisal): docBg is read by
-    // the reference-model derivation and the scoring join; refBg by the
-    // context rollup, the vocab scalar, and the join.
-    val docBg = Caches.persistEager(
+    // persisted ×2: docBg is read by the reference-model derivation and
+    // the scoring join; refBg by the context rollup, the vocab scalar, and
+    // the join.
+    val docBg = Caches.persist(
       occ.groupBy("doc_id", "is_ref", "prev", "cur").agg(count(lit(1)).as("m")))
-    val refBg = Caches.persistEager(docBg.where(col("is_ref"))
+    val refBg = Caches.persist(docBg.where(col("is_ref"))
       .groupBy("prev", "cur").agg(sum(col("m")).as("cbg")))
     val refCtx = refBg.groupBy("prev").agg(sum(col("cbg")).as("cprev"))
     val vocab = refBg.agg(countDistinct(col("cur")).as("__v"))

@@ -121,20 +121,18 @@ object GeoOps {
       s"dbscan: $idCol must be numeric (cluster labels are min core ids), " +
         s"got ${points.schema(idCol).dataType.simpleString}")
     import org.apache.spark.sql.expressions.Window
-    // EAGER point cache: the point expression (here: a parquet scan + two
+    // point cache: the point expression (here: a parquet scan + two
     // md5-derived coordinates per row) is read by the probe side, the
-    // build side, and the final id-universe join — lazily, each consumer
+    // build side, and the final id-universe join — uncached, each consumer
     // re-ran the scan+hash pipeline as its own single-task stage
     // (measured on bgeo_dbscan at sf0.1: four sequential ~270 ms scans).
-    val pts = graft.llm.Caches.persistEager(points.select(
+    val pts = graft.llm.Caches.persist(points.select(
       col(idCol).as("__pid"), col(latCol).as("__plat"), col(lonCol).as("__plon")))
     val pairs = withinRadiusPairs(pts, "__pid", "__plat", "__plon", epsM, maxAbsLatDeg)
     // Symmetrize via explode (one pass over the pair stream, not a
-    // two-legged union that would run the cell join twice), then persist
-    // EAGERLY: counts, the core-core edge build, and border assignment all
-    // read it, and their leaf stages launch concurrently under AQE — a
-    // lazy cache let each first consumer recompute the cell join.
-    val sym = graft.llm.Caches.persistEager(pairs.select(explode(array(
+    // two-legged union that would run the cell join twice), then persist:
+    // counts, the core-core edge build, and border assignment all read it.
+    val sym = graft.llm.Caches.persist(pairs.select(explode(array(
         struct(col("id_l").as("id"), col("id_r").as("nbr"), col("dist_m")),
         struct(col("id_r").as("id"), col("id_l").as("nbr"), col("dist_m")))).as("e"))
       .select(col("e.id").as("id"), col("e.nbr").as("nbr"), col("e.dist_m").as("dist_m")))

@@ -3512,9 +3512,7 @@ object LlmQueries {
       // persisted: tr and te both consume the labeled shingle stream —
       // two independent plans would re-run the interpreted shingle HOF
       // over the full corpus (the Dedup.shingleTable cost note)
-      // EAGER: tr and te land in one action (lazy => the shingle HOF ran
-      // once per concurrent leaf)
-      val sh = graft.llm.Caches.persistEager(
+      val sh = graft.llm.Caches.persist(
         Dedup.shingleTable(docs, "doc_id", "text", 3)
           .select(col("doc_id"), col("shingle").as("sh")).distinct()
           .join(lab, Seq("doc_id")))
@@ -3802,9 +3800,8 @@ object LlmQueries {
       val toks = TextOps.tokens(col("text"))
       // persisted: the per-source rank leg and the global rank leg both
       // consume the scored table — without it the tokenize+score scan
-      // runs twice
-      // EAGER: both rank legs + the ntot scalar read sc in one action
-      val sc = graft.llm.Caches.persistEager(Td.table(s, dir, "documents")
+      // runs twice (the ntot scalar reads it too)
+      val sc = graft.llm.Caches.persist(Td.table(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           floor(TextOps.qualityScore(toks, col("text")) * 1000000).cast("long").as("s")))
       // the corpus total rides the plan as a 1-row broadcast (the

@@ -2993,9 +2993,7 @@ object RelationalQueries {
       // (and the planner broadcast-builds one self-join side from a full
       // re-evaluation). The frame is two slim columns, far smaller than
       // its lineitem-sized input; released by the bench harness.
-      // EAGER: all four consumers sit in ONE action, and a lazy cache let
-      // each concurrent leaf stage re-run the 3-table join + distinct
-      val cb = graft.llm.Caches.persistEager(Td.table(s, dir, "lineitem")
+      val cb = graft.llm.Caches.persist(Td.table(s, dir, "lineitem")
         .join(Td.table(s, dir, "orders"),
           col("o_orderkey") === col("l_orderkey"))
         .join(broadcast(Td.table(s, dir, "part")),

@@ -4,8 +4,8 @@ import graft.{SparkSpec, Td}
 
 /** Pins the dedup/similarity tier's cache lifecycle: every internal
   * persist is released by Caches.release() after the consuming action —
-  * no dead cached RDDs accumulate across queries (the Bench/Verify/RunOne
-  * loops call releaseAll between queries). */
+  * no dead cached RDDs accumulate across queries (the Bench, Verify and
+  * StageProbe loops call releaseAll between queries). */
 class CachesSpec extends SparkSpec {
 
   private def noopWrite(df: org.apache.spark.sql.DataFrame): Unit =

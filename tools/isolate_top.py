@@ -13,7 +13,7 @@ per-query number read off the raw sweep is therefore NOT decidable
 evidence — which is exactly what left r10's lg1_pagerank flag open.
 
 This post-pass re-measures the top-N sweep rows (by sweep wall) in a FRESH
-JVM each (sbt runMain graft.RunOne <q> <dir> run <runs> — own heap, own
+JVM each (sbt runMain graft.StageProbe <dir> <runs> <q> — own heap, own
 JIT, own session; min-of-runs reported), then writes the artifact back
 with both columns:
 
@@ -55,7 +55,7 @@ import re
 import subprocess
 import sys
 
-LINE = re.compile(r"^\[runone\] (\S+) run (\d+): ([0-9.]+) s\s*$")
+LINE = re.compile(r"^\[stageprobe\] (\S+) run (\d+): ([0-9.]+) s\s*$")
 
 # The compare_bench.py regression band, reused verbatim so "would this
 # sweep row flag against last round" and "did it flag" share one formula.
@@ -78,7 +78,7 @@ def is_noisy(times):
 
 
 def rerun(query, sf_dir, runs, mem, cpus):
-    """One fresh-JVM RunOne invocation.
+    """One fresh-JVM StageProbe invocation.
 
     Returns (times, failure): times is the full clean run list on success
     (rc == 0 AND all `runs` lines parsed) and None otherwise; failure is a
@@ -86,7 +86,7 @@ def rerun(query, sf_dir, runs, mem, cpus):
     returned as a result — a child that OOM'd after run 1 of 2 must not
     stamp min(partial) as the verdict-facing number.
     """
-    cmd = ["sbt", "-batch", f"runMain graft.RunOne {query} {sf_dir} run {runs}"]
+    cmd = ["sbt", "-batch", f"runMain graft.StageProbe {sf_dir} {runs} {query}"]
     env = dict(SPARK_DRIVER_MEM=mem, SPARK_GRAFT_CPUS=str(cpus))
     import os
     full_env = {**os.environ, **env}
