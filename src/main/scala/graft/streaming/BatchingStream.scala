@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.llm.Dedup
 
@@ -67,7 +67,8 @@ object BatchingStream {
       }
   }
 
-  /** Landing-dir JSONL drops → incrementally batched parquet. */
+  /** Landing-dir JSONL drops → incrementally batched parquet, one owned
+    * batch_id partition per trigger. */
   def start(
       spark: SparkSession,
       landingDir: String,
@@ -75,29 +76,13 @@ object BatchingStream {
       checkpointDir: String,
       tokenBudget: Long, shards: Int): StreamingQuery = {
     import spark.implicits._
-    // a fresh checkpoint over an existing sink would restart batch ids
-    // (and every shard's position cursor) at 0 and clobber batch_id=0
-    StreamGuards.requireStoreOwnership(spark, checkpointDir, outDir,
-      "BatchingStream batched sink")
-    val stream = spark.readStream
-      .schema(CurationStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
+    val stream = StreamGuards.landing(spark, CurationStream.docSchema, "json", landingDir)
       .select(col("doc_id").cast("long"),
         size(graft.llm.TextOps.tokens(col("text"))).cast("long"))
       .as[(Long, Long)]
-    batch(stream, tokenBudget, shards).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (b: Dataset[BatchedDoc], batchId: Long) =>
-        // idempotent per-batch_id partition sink, the PackingStream contract
-        b.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamGuards.drain(batch(stream, tokenBudget, shards),
+        OutputMode.Update(), checkpointDir, outDir -> "BatchingStream batched sink") {
+      (b, batchId) => StreamGuards.writeOwned(b, batchId, outDir)
+    }
   }
 }

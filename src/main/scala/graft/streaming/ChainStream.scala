@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.llm.{Curation, Sampling, TextOps}
 
@@ -37,8 +38,8 @@ final case class ChainCurated(doc_id: Long, text: String, n_tok: Long)
   *    [[Sampling.sequencePack]] exactly.
   *
   * Crash-replay safety at the curated seam: stage 1 writes each batch
-  * into its own `batch_id` partition with dynamic overwrite (the
-  * [[CurationStream.writeBatch]] idiom), so a replayed micro-batch
+  * into its own `batch_id` partition with dynamic overwrite
+  * ([[StreamGuards.writeOwned]]), so a replayed micro-batch
   * REPLACES itself instead of double-appending. That suffices for
   * end-to-end exactly-once here because the orchestration is sequential:
   * stage 2 only starts after stage 1's checkpoint commits, so any batch
@@ -83,31 +84,15 @@ object ChainStream {
       spark: SparkSession, landingDir: String, workDir: String): Boolean = {
     import spark.implicits._
     val curatedDir = s"$workDir/curated"
-    // the curated tier is the chain's durable restart point: refuse a
-    // fresh curate-checkpoint over an existing tier (batch ids would
-    // restart at 0 and clobber batch_id=0, then stage 2 would re-read
-    // the rewritten files as new — double-packing the old world)
-    StreamGuards.requireStoreOwnership(spark, s"$workDir/ckpt_curate",
-      curatedDir, "ChainStream curated tier")
-    val landed = spark.readStream
-      .schema(CurationStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
+    val landed = StreamGuards.landing(spark, CurationStream.docSchema, "json", landingDir)
       .as[(Long, String, String, String)]
-    val q1 = curate(landed).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[ChainCurated], batchId: Long) =>
-        // idempotent under replay: the batch owns its partition (scaladoc)
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(curatedDir)
-      }
-      .option("checkpointLocation", s"$workDir/ckpt_curate")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q1.awaitTermination()
+    // the curated tier is the chain's durable restart point: a foreign
+    // curate checkpoint would clobber batch_id=0, then stage 2 would re-read
+    // the rewritten files as new — double-packing the old world
+    StreamGuards.drain(curate(landed), OutputMode.Update(),
+        s"$workDir/ckpt_curate", curatedDir -> "ChainStream curated tier") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, curatedDir)
+    }.awaitTermination()
     // Hadoop FS, not java.io: workDir may be hdfs://, s3a://, ...
     val curatedPath = new org.apache.hadoop.fs.Path(curatedDir)
     val fs = curatedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -135,18 +120,12 @@ object ChainStream {
       spark: SparkSession, landingDir: String, workDir: String,
       ctxTokens: Long, shards: Int): Unit = {
     if (!runCurateStage(spark, landingDir, workDir)) return
-    StreamGuards.requireStoreOwnership(spark, s"$workDir/ckpt_pack",
-      s"$workDir/packed", "ChainStream packed tier")
-    val q2 = PackingStream.packWeighted(
-        curatedWeights(spark, workDir), ctxTokens, shards).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[PackedDoc], batchId: Long) =>
-        PackingStream.writeBatch(batch, batchId, s"$workDir/packed")
-      }
-      .option("checkpointLocation", s"$workDir/ckpt_pack")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination()
+    val packedDir = s"$workDir/packed"
+    StreamGuards.drain(
+        PackingStream.packWeighted(curatedWeights(spark, workDir), ctxTokens, shards),
+        OutputMode.Update(), s"$workDir/ckpt_pack", packedDir -> "ChainStream packed tier") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, packedDir)
+    }.awaitTermination()
   }
 
   /** The BATCHING-GOLD chain variant: same bronze→silver stages, gold =
@@ -162,23 +141,25 @@ object ChainStream {
       spark: SparkSession, landingDir: String, workDir: String,
       tokenBudget: Long, shards: Int): Unit = {
     if (!runCurateStage(spark, landingDir, workDir)) return
-    StreamGuards.requireStoreOwnership(spark, s"$workDir/ckpt_batch",
-      s"$workDir/batched", "ChainStream batched tier")
-    val q2 = BatchingStream.batch(
-        curatedWeights(spark, workDir), tokenBudget, shards).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[BatchedDoc], batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$workDir/batched")
-      }
-      .option("checkpointLocation", s"$workDir/ckpt_batch")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination()
+    val batchedDir = s"$workDir/batched"
+    StreamGuards.drain(
+        BatchingStream.batch(curatedWeights(spark, workDir), tokenBudget, shards),
+        OutputMode.Update(), s"$workDir/ckpt_batch", batchedDir -> "ChainStream batched tier") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, batchedDir)
+    }.awaitTermination()
   }
+
+  /** The batch twins' shared survivor set: scorecard keep-filter, then the
+    * min-id survivor per md5(text), as (doc_id, text, n_tok). */
+  private def batchSurvivors(docs: Dataset[(Long, String, String, String)]): DataFrame =
+    Curation.withVerdict(docs.toDF("doc_id", "lang", "source", "text"))
+      .where(col("keep"))
+      .withColumn("content_hash", md5(col("text")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("content_hash").orderBy("doc_id")))
+      .where(col("rn") === 1)
+      .select(col("doc_id"), col("text"),
+        size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
 
   /** The BATCH twin of the whole chain, for equivalence testing: shared
     * scorecard → min-id survivor per md5(text) → batch sequencePack. */
@@ -187,17 +168,7 @@ object ChainStream {
       ctxTokens: Long, shards: Int): Dataset[(Long, Long, Long, Long)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val df = docs.toDF("doc_id", "lang", "source", "text")
-    val kept = Curation.withVerdict(df).where(col("keep"))
-    val survivors = kept
-      .withColumn("content_hash", md5(col("text")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("content_hash").orderBy("doc_id")))
-      .where(col("rn") === 1)
-      .select(col("doc_id"), col("text"),
-        size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
-    Sampling.sequencePack(survivors, "doc_id", "n_tok", ctxTokens, shards)
+    Sampling.sequencePack(batchSurvivors(docs), "doc_id", "n_tok", ctxTokens, shards)
       .select(col("doc_id"), col("shard"), col("bin"), col("offset"))
       .as[(Long, Long, Long, Long)]
   }
@@ -210,17 +181,8 @@ object ChainStream {
       tokenBudget: Long, shards: Int): Dataset[(Long, Int, Long, Long, Long)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val df = docs.toDF("doc_id", "lang", "source", "text")
-    val kept = Curation.withVerdict(df).where(col("keep"))
-    val survivors = kept
-      .withColumn("content_hash", md5(col("text")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("content_hash").orderBy("doc_id")))
-      .where(col("rn") === 1)
-      .select(col("doc_id"),
-        size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
-    Sampling.lengthBatches(survivors, "doc_id", "n_tok", tokenBudget, shards)
+    Sampling.lengthBatches(batchSurvivors(docs).select("doc_id", "n_tok"),
+        "doc_id", "n_tok", tokenBudget, shards)
       .select(col("id"), col("band"), col("shard"), col("batch_idx"), col("slot"))
       .as[(Long, Int, Long, Long, Long)]
   }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.llm.Similarity
@@ -25,9 +25,8 @@ import graft.llm.Similarity
   * code object as the batch operator (the ChainStream discipline), so
   * stream and batch verdicts cannot drift.
   *
-  * Sink contract: one batch_id partition per trigger with dynamic
-  * overwrite — a replayed trigger replaces itself (idempotent under
-  * at-least-once delivery, the CurationStream seam).
+  * Sink contract: one owned batch_id partition per trigger
+  * ([[StreamGuards.writeOwned]]) — a replayed trigger replaces itself.
   *
   * Scale: the static members table is partition-pruned-joined per trigger;
   * trigger cost is bounded by drop size × nprobe × cell occupancy — the
@@ -56,33 +55,18 @@ object ContamStream {
       spark: SparkSession, landingDir: String, train: org.apache.spark.sql.DataFrame,
       outDir: String, checkpointDir: String, minCos: Double,
       kCells: Int = 0, nprobe: Int = 2, dims: Int = 64): StreamingQuery = {
-    // a fresh checkpoint over an existing verdict sink would restart
-    // batch ids at 0 and silently clobber the old batch_id=0 partition
-    StreamGuards.requireStoreOwnership(spark, checkpointDir, outDir,
-      "ContamStream verdict sink")
     val idx = Similarity.buildContamIndex(train, "vec_id", "embedding",
       kCells, nprobe, dims)
-    val evals = spark.readStream
-      .schema(evalSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
+    val evals = StreamGuards.landing(spark, evalSchema, "parquet", landingDir)
       // a permissive landing line with a null id/vector carries nothing to
       // probe and would crash the non-nullable encoder — and a crashed
       // stream re-reads the same file forever (the NearDupStream edge rule)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-    Similarity.probeContamination(evals, "vec_id", "embedding", idx, minCos)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Similarity.contamRollup(batch.toDF())
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamGuards.drain(
+        Similarity.probeContamination(evals, "vec_id", "embedding", idx, minCos),
+        OutputMode.Append(), checkpointDir, outDir -> "ContamStream verdict sink") {
+      (batch, batchId) =>
+        StreamGuards.writeOwned(Similarity.contamRollup(batch), batchId, outDir)
+    }
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.llm.{Caches, SuffixArray}
@@ -24,9 +24,8 @@ import graft.llm.{Caches, SuffixArray}
   * trigger over (eval ∪ drop) yields row-identical output to one batch
   * run over (eval ∪ all drops), restricted to that drop's docs
   * (spec-pinned, including across a restart). Each trigger writes its
-  * verdicts to its own `batch_id` partition with dynamic overwrite, so a
-  * replayed trigger replaces itself (the CurationStream idempotence
-  * seam).
+  * verdicts to its own `batch_id` partition ([[StreamGuards.writeOwned]]),
+  * so a replayed trigger replaces itself.
   *
   * Scale shape: per trigger one suffix sort over E + B positions (E =
   * eval corpus, B = drop), then the two segmented scans — the honest
@@ -71,65 +70,47 @@ object ContaminationStream {
     // written snapshot after a crash
     evalDocs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .write.mode("overwrite").parquet(evalDir)
-    // refuse a fresh/foreign checkpoint over an existing ledger: restarted
-    // batch ids would check the first drop against a ledger MINUS the old
-    // batch-0 ids and then clobber that partition — exactly the cross-drop
-    // collision class the ledger exists to catch would go undetected
-    StreamGuards.requireStoreOwnership(spark, checkpointDir,
-      outDir.stripSuffix("/") + "_ids", "ContaminationStream id ledger")
-    val drops = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
+    val ledgerDir = outDir.stripSuffix("/") + "_ids"
+    val drops = StreamGuards.landing(spark, docSchema, "parquet", landingDir)
       // permissive landing rows with no id/text carry nothing and must not
       // crash-loop the trigger (the NearDupStream edge rule)
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
-    drops.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val drop = batch.toDF()
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        val eval = spark.read.parquet(evalDir)
-        val idClash = drop.select("doc_id")
-          .join(eval.select("doc_id"), Seq("doc_id"), "left_semi").count()
-        require(idClash == 0L,
-          s"ContaminationStream: $idClash drop doc id(s) collide with the " +
-            "frozen eval id space — remap the candidate ids before landing")
-        val ledgerDir = outDir.stripSuffix("/") + "_ids"
-        val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
-        val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(ledgerPath)) {
-          // cross-DROP collisions: ids from earlier triggers, excluding our
-          // own partition so a replayed trigger doesn't indict itself
-          val crossClash = drop.select("doc_id")
-            .join(spark.read.parquet(ledgerDir)
-                .filter(col("batch_id") =!= batchId).select("doc_id"),
-              Seq("doc_id"), "left_semi").count()
-          require(crossClash == 0L,
-            s"ContaminationStream: $crossClash drop doc id(s) collide with " +
-              "ids from an earlier drop — the sink's batch-equivalence " +
-              "contract requires globally unique candidate ids")
-        }
-        val union = drop.withColumn("__cside", lit(1))
-          .unionByName(eval.withColumn("__cside", lit(0)))
-        try {
-          SuffixArray.crossDupSpansAuto(union, "doc_id", "text", "__cside", minRun)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outDir)
-          // admit this drop's ids to the ledger LAST: a crash anywhere
-          // above replays the trigger, which overwrites both partitions
-          drop.select("doc_id").withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(ledgerDir)
-        } finally Caches.releaseAll(spark) // the detector persists intermediates
+    // a foreign checkpoint would check its first drop against a ledger
+    // MINUS the old batch-0 ids and then clobber that partition — exactly
+    // the cross-drop collision class the ledger exists to catch
+    StreamGuards.drain(drops, OutputMode.Append(), checkpointDir,
+        ledgerDir -> "ContaminationStream id ledger") { (batch, batchId) =>
+      val drop = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val eval = spark.read.parquet(evalDir)
+      val idClash = drop.select("doc_id")
+        .join(eval.select("doc_id"), Seq("doc_id"), "left_semi").count()
+      require(idClash == 0L,
+        s"ContaminationStream: $idClash drop doc id(s) collide with the " +
+          "frozen eval id space — remap the candidate ids before landing")
+      val ledgerPath = new org.apache.hadoop.fs.Path(ledgerDir)
+      val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(ledgerPath)) {
+        // cross-DROP collisions: ids from earlier triggers, excluding our
+        // own partition so a replayed trigger doesn't indict itself
+        val crossClash = drop.select("doc_id")
+          .join(spark.read.parquet(ledgerDir)
+              .filter(col("batch_id") =!= batchId).select("doc_id"),
+            Seq("doc_id"), "left_semi").count()
+        require(crossClash == 0L,
+          s"ContaminationStream: $crossClash drop doc id(s) collide with " +
+            "ids from an earlier drop — the sink's batch-equivalence " +
+            "contract requires globally unique candidate ids")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      val union = drop.withColumn("__cside", lit(1))
+        .unionByName(eval.withColumn("__cside", lit(0)))
+      try {
+        StreamGuards.writeOwned(
+          SuffixArray.crossDupSpansAuto(union, "doc_id", "text", "__cside", minRun),
+          batchId, outDir)
+        // admit this drop's ids to the ledger LAST: a crash anywhere
+        // above replays the trigger, which overwrites both partitions
+        StreamGuards.writeOwned(drop.select("doc_id"), batchId, ledgerDir)
+      } finally Caches.releaseAll(spark) // the detector persists intermediates
+    }
   }
 }

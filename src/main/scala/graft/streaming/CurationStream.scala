@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.llm.TextOps
@@ -70,7 +70,10 @@ object CurationStream {
       }
   }
 
-  /** Landing-dir JSONL drops → curated, deduplicated parquet. */
+  /** Landing-dir JSONL drops → curated, deduplicated parquet, one owned
+    * batch_id partition per trigger ([[StreamGuards.writeOwned]]: a replay
+    * replaces itself, so the cross-restart dedup guarantee holds end to
+    * end). */
   def start(
       spark: SparkSession,
       landingDir: String,
@@ -78,36 +81,11 @@ object CurationStream {
       checkpointDir: String,
       minTok: Int = 10, maxTok: Int = 5000, minQuality: Double = 0.5): StreamingQuery = {
     import spark.implicits._
-    // a fresh checkpoint over an existing curated sink would restart
-    // batch ids (and the dedup state) at 0 and clobber batch_id=0
-    StreamGuards.requireStoreOwnership(spark, checkpointDir, outDir,
-      "CurationStream curated sink")
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
+    val stream = StreamGuards.landing(spark, docSchema, "json", landingDir)
       .as[(Long, String, String, String)]
-    curate(stream, minTok, maxTok, minQuality).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[CuratedDoc], batchId: Long) =>
-        writeBatch(batch, batchId, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamGuards.drain(curate(stream, minTok, maxTok, minQuality),
+        OutputMode.Update(), checkpointDir, outDir -> "CurationStream curated sink") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, outDir)
+    }
   }
-
-  /** Idempotent sink: foreachBatch is at-least-once, and the state store
-    * rolls back with the replayed batch (flatMapGroupsWithState re-emits
-    * the same rows), so each batch writes its own batch_id partition with
-    * dynamic overwrite — a replay replaces itself instead of appending
-    * duplicates, preserving the cross-restart dedup guarantee end to end.
-    * Exposed for the replay-idempotence spec. */
-  private[streaming] def writeBatch(
-      batch: Dataset[CuratedDoc], batchId: Long, outDir: String): Unit =
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
 }

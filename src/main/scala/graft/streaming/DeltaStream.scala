@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.sources.Schemas
 
@@ -94,27 +94,22 @@ object DeltaStream {
   }
 
   /** Ingest-and-diff pipeline: status-snapshot JSON drops in `landingDir` →
-    * stateful deltas → parquet append at `outDir`. One file per trigger so
-    * state genuinely carries across micro-batches. */
+    * stateful deltas → one owned batch_id partition per trigger at
+    * `outDir` ([[StreamGuards.writeOwned]]: a replayed trigger replaces
+    * itself instead of appending its deltas twice). One file per trigger
+    * so state genuinely carries across micro-batches. */
   def start(
       spark: SparkSession,
       landingDir: String,
       outDir: String,
       checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    val stream = spark.readStream
-      .schema(Schemas.stationStatus)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
+    val stream = StreamGuards.landing(spark, Schemas.stationStatus, "json", landingDir)
       .selectExpr("station_id", "scraped_at", "num_bikes_available AS bikes")
       .as[StatusPoint]
-    deltas(stream).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[DeltaPoint], _: Long) =>
-        batch.write.mode("append").parquet(outDir): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamGuards.drain(deltas(stream), OutputMode.Update(), checkpointDir,
+        outDir -> "DeltaStream delta sink") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, outDir)
+    }
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.llm.Drift
@@ -22,9 +22,9 @@ import graft.llm.Drift
   * [[Drift.embeddingDimSums]] collapse any corpus slice to a
   * vocabulary/dimension-cardinality summary, and summaries over disjoint
   * slices union+re-aggregate into the joint summary. Each trigger writes
-  * its drop's partial summary to ONE `batch_id` partition (dynamic
-  * overwrite — a replayed trigger replaces itself, the CurationStream
-  * idempotence seam), then re-runs the SAME rollup code object
+  * its drop's partial summary to ONE owned `batch_id` partition
+  * ([[StreamGuards.writeOwned]] — a replayed trigger replaces itself),
+  * then re-runs the SAME rollup code object
   * ([[Drift.tokenDriftRollup]] / [[Drift.embeddingDriftRollup]]) over the
   * accumulated summaries. Stream and batch verdicts therefore cannot
   * drift: both are the rollup of the same additive algebra.
@@ -55,32 +55,21 @@ object DriftStream {
       spark: SparkSession, stream: DataFrame, baselineSummary: DataFrame,
       partialOf: DataFrame => DataFrame, rollup: DataFrame => DataFrame,
       countsDir: String, outDir: String, checkpointDir: String): StreamingQuery = {
-    def writeSummary(df: DataFrame, batchId: Long): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(countsDir)
-    // refuse a fresh/foreign checkpoint over an existing summary log:
-    // restarted batch ids would overwrite old partials and the rollup
-    // would silently forget those drops (the batch_id=-1 baseline seed is
-    // exempt — it is re-derived idempotently below, owned by no batch)
+    // guard BEFORE the seed write below, so a refused start leaves the
+    // foreign summary log untouched; restarted batch ids would otherwise
+    // overwrite old partials and the rollup would silently forget those
+    // drops (the batch_id=-1 seed itself is exempt, owned by no batch)
     StreamGuards.requireStoreOwnership(spark, checkpointDir, countsDir,
       "DriftStream summary log")
     // one baseline scan per (re)start, idempotent into its own partition;
     // restarts could skip it, but re-deriving from the frozen snapshot is
     // simpler than trusting a maybe-half-written partition after a crash
-    writeSummary(baselineSummary, -1L)
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        writeSummary(partialOf(batch.toDF()), batchId)
-        rollup(spark.read.parquet(countsDir))
-          .write.mode("overwrite").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamGuards.writeOwned(baselineSummary, -1L, countsDir)
+    StreamGuards.drain(stream, OutputMode.Append(), checkpointDir) { (batch, batchId) =>
+      StreamGuards.writeOwned(partialOf(batch), batchId, countsDir)
+      rollup(spark.read.parquet(countsDir))
+        .write.mode("overwrite").parquet(outDir)
+    }
   }
 
   /** Token-distribution drift of the accumulating candidate corpus vs the
@@ -91,10 +80,7 @@ object DriftStream {
       countsDir: String, outDir: String, checkpointDir: String,
       topK: Int = 30): StreamingQuery = {
     require(topK > 0, s"startTokenDrift: topK must be positive, got $topK")
-    val drops = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
+    val drops = StreamGuards.landing(spark, docSchema, "parquet", landingDir)
       // a permissive landing line with no text carries no tokens and must
       // not crash-loop the trigger (the NearDupStream edge rule)
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
@@ -113,10 +99,7 @@ object DriftStream {
       countsDir: String, outDir: String, checkpointDir: String,
       topK: Int = 16): StreamingQuery = {
     require(topK > 0, s"startEmbeddingDrift: topK must be positive, got $topK")
-    val drops = spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
+    val drops = StreamGuards.landing(spark, vecSchema, "parquet", landingDir)
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
     run(spark, drops,
       Drift.embeddingDimSums(baseline, "embedding", lit(0)),

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.ops.{OdInference, StationDelta}
 import graft.sources.Schemas
@@ -99,28 +99,18 @@ object FlowStream {
       checkpointDir: String,
       bucketMinutes: Int = 10): StreamingQuery = {
     import spark.implicits._
-    // refuse a fresh/foreign checkpoint over an existing delta journal:
-    // restarted batch ids would overwrite old batch partitions, and the
-    // journal is the rebuild source for missing compaction buckets
-    StreamGuards.requireStoreOwnership(spark, checkpointDir, deltasDir,
-      "FlowStream delta journal")
-    val stream = spark.readStream
-      .schema(Schemas.stationStatus)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
+    val stream = StreamGuards.landing(spark, Schemas.stationStatus, "json", landingDir)
       .selectExpr("station_id", "scraped_at", "num_bikes_available AS bikes")
       .as[StatusPoint]
     val dim = stations.select(
       col("station_id").cast("string").as("station_id"),
       col("lat").cast("double"), col("lon").cast("double"))
-    bucketDeltas(stream, bucketMinutes).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[ClosedBucketDelta], batchId: Long) =>
-        processBatch(spark, batch, batchId, dim, deltasDir, flowsDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    // the journal is also the rebuild source for missing compaction
+    // buckets, so rows a foreign checkpoint overwrites there are gone
+    StreamGuards.drain(bucketDeltas(stream, bucketMinutes), OutputMode.Update(),
+        checkpointDir, deltasDir -> "FlowStream delta journal") {
+      (batch, batchId) => processBatch(spark, batch, batchId, dim, deltasDir, flowsDir)
+    }
   }
 
   /** The bucket-partitioned compaction of the delta journal, derived from
@@ -186,8 +176,8 @@ object FlowStream {
     * foreachBatch is at-least-once — a crash between the sink writes and
     * the checkpoint commit replays the batch — so every write is
     * idempotent by construction:
-    *  - the journal appends under a batch_id partition with dynamic
-    *    overwrite (a replayed batch REPLACES its own partition);
+    *  - the journal writes an owned batch_id partition
+    *    ([[StreamGuards.writeOwned]]: a replayed batch REPLACES it);
     *  - the compaction merges the batch into its buckets' partitions with
     *    a (station_id, bucket) key dedup — a station closes a bucket at
     *    most once, and a replayed batch re-emits identical rows (the
@@ -206,11 +196,7 @@ object FlowStream {
     import spark.implicits._
     val touched = batch.select("bucket").distinct()
       .as[Long].collect() // bounded: buckets closed in ONE micro-batch
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(deltasDir)
+    StreamGuards.writeOwned(batch, batchId, deltasDir)
     if (touched.nonEmpty) {
       val merged = batch.toDF()
         .select(col("station_id"), col("delta").cast("long").as("delta"),

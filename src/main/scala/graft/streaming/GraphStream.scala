@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.llm.{Caches, GraphOps}
@@ -18,9 +18,9 @@ import graft.llm.{Caches, GraphOps}
   *
   * Lake maintenance is append + bucket-aware compaction, never
   * rebuild-per-trigger:
-  *  - A plain-parquet EDGE JOURNAL (one `batch_id` partition per trigger,
-  *    dynamic overwrite — a replayed trigger replaces itself, the
-  *    CurationStream idempotence seam) is the durable source of truth.
+  *  - A plain-parquet EDGE JOURNAL (one owned `batch_id` partition per
+  *    trigger, [[StreamGuards.writeOwned]] — a replayed trigger replaces
+  *    itself) is the durable source of truth.
   *  - The kernel-facing table is bucket-sorted on `src`
   *    ([[graft.sources.LlmLake.writeEdges]]'s layout — the iterative
   *    kernels re-join it once per round, so the corpus-dominant edge side
@@ -287,116 +287,94 @@ object GraphStream {
         .bucketBy(buckets, "src").sortBy("src")
         .saveAsTable(table)
 
-    // refuse a fresh/foreign checkpoint over an existing journal: batch
-    // ids restart at 0 and the first trigger would silently overwrite the
-    // old batch_id=0 partition — the next compaction rebuilds FROM the
-    // journal, permanently dropping the lost edges with no error
-    StreamGuards.requireStoreOwnership(spark, checkpointDir, journalDir,
-      "GraphStream edge journal")
-
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$lakeRoot'")
 
-    val drops = spark.readStream
-      .schema(pairSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
+    val drops = StreamGuards.landing(spark, pairSchema, "parquet", landingDir)
       // permissive landing rows carrying no endpoints are dropped, never a
       // crash loop (the NearDupStream edge rule); self-loops carry no
       // neighbor information for either kernel and are dropped with them
       .filter(col("d1").isNotNull && col("d2").isNotNull && col("d1") =!= col("d2"))
 
-    drops.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        try {
-          // 1. journal the drop — idempotent under replay
-          batch.toDF().select("d1", "d2")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(journalDir)
-          failpoint(spark, FailAfterJournalConf, batchId)
-          // 2. fold into the bucketed table: fresh catalog (new session) or
-          //    compaction cadence → rebuild from journal; otherwise append
-          //    only the genuinely new edges (anti-join = replay no-op)
-          if (!spark.catalog.tableExists(table) ||
-              journalBatches() % compactEvery == 0) {
-            rebuildFromJournal()
-          } else {
-            val newSym = symmetrize(batch.toDF().select("d1", "d2"))
-            newSym.join(spark.table(table), Seq("src", "dst"), "left_anti")
-              .write.mode("append")
-              .bucketBy(buckets, "src").sortBy("src")
-              .saveAsTable(table)
-            // the append ran through the MICRO-BATCH's cloned session
-            // (newSym derives from `batch`), which refreshes only the
-            // clone's table cache — invalidate the outer session's cached
-            // file index or step 3 labels the PRE-append file list
-            spark.catalog.refreshTable(table)
+    // a foreign checkpoint would overwrite the old batch_id=0 journal
+    // partition, and the next compaction rebuilds FROM the journal —
+    // permanently dropping the lost edges with no error
+    StreamGuards.drain(drops, OutputMode.Append(), checkpointDir,
+        journalDir -> "GraphStream edge journal") { (batch, batchId) =>
+      try {
+        // 1. journal the drop — idempotent under replay
+        StreamGuards.writeOwned(batch.select("d1", "d2"), batchId, journalDir)
+        failpoint(spark, FailAfterJournalConf, batchId)
+        // 2. fold into the bucketed table: fresh catalog (new session) or
+        //    compaction cadence → rebuild from journal; otherwise append
+        //    only the genuinely new edges (anti-join = replay no-op)
+        if (!spark.catalog.tableExists(table) ||
+            journalBatches() % compactEvery == 0) {
+          rebuildFromJournal()
+        } else {
+          val newSym = symmetrize(batch.select("d1", "d2"))
+          newSym.join(spark.table(table), Seq("src", "dst"), "left_anti")
+            .write.mode("append")
+            .bucketBy(buckets, "src").sortBy("src")
+            .saveAsTable(table)
+          // the append ran through the MICRO-BATCH's cloned session
+          // (newSym derives from `batch`), which refreshes only the
+          // clone's table cache — invalidate the outer session's cached
+          // file index or step 3 labels the PRE-append file list
+          spark.catalog.refreshTable(table)
+        }
+        failpoint(spark, FailAfterFoldConf, batchId)
+        // 3. re-label through the BATCH kernels — the full accumulated
+        //    graph, or (incremental mode) only the components the drop
+        //    touched — and sink per the mode: full snapshots, or only
+        //    the changed labels (+ compacting snapshots on cadence)
+        val edges = spark.table(table)
+        // fold only checkpoint-committed batches (< batchId): the
+        // newest batch may be THIS one mid-replay, half-written
+        val prior = currentVerdicts(spark, outDir, upTo = batchId - 1)
+        val sub =
+          if (incremental && prior.isDefined)
+            incrementalSub(spark, edges, batch, lpaIters,
+              bfsRounds, srcMod, closureRounds)
+          else None
+        if (sink == "snapshot") {
+          val (communities, hops) = sub match {
+            case Some((affected, subComm, subHops)) =>
+              splice(prior.get, affected, subComm, subHops)
+            case None => fullLabels(edges, lpaIters, bfsRounds, srcMod)
           }
-          failpoint(spark, FailAfterFoldConf, batchId)
-          // 3. re-label through the BATCH kernels — the full accumulated
-          //    graph, or (incremental mode) only the components the drop
-          //    touched — and sink per the mode: full snapshots, or only
-          //    the changed labels (+ compacting snapshots on cadence)
-          val edges = spark.table(table)
-          // fold only checkpoint-committed batches (< batchId): the
-          // newest batch may be THIS one mid-replay, half-written
-          val prior = currentVerdicts(spark, outDir, upTo = batchId - 1)
-          val sub =
-            if (incremental && prior.isDefined)
-              incrementalSub(spark, edges, batch.toDF(), lpaIters,
-                bfsRounds, srcMod, closureRounds)
-            else None
-          def sinkPart(df: DataFrame, name: String): Unit =
-            df.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(s"$outDir/$name")
-          if (sink == "snapshot") {
-            val (communities, hops) = sub match {
+          StreamGuards.writeOwned(communities, batchId, s"$outDir/communities")
+          StreamGuards.writeOwned(hops, batchId, s"$outDir/hops")
+        } else {
+          // delta mode: the new labels cover the affected subgraph
+          // (incremental) or everything (full fallback); either way the
+          // emitted delta is the payload-diff against the prior fold —
+          // unaffected docs are label-identical by the component
+          // decomposition, so diffing the sub-run IS the full diff
+          val (newComm, newHops) = sub match {
+            case Some((_, subComm, subHops)) => (subComm, subHops)
+            case None => fullLabels(edges, lpaIters, bfsRounds, srcMod)
+          }
+          val (dComm, dHops) = prior match {
+            case Some((pc, ph)) =>
+              (changedRows(newComm, pc, Seq("community", "converged")),
+                changedRows(newHops, ph, Seq("hops", "converged")))
+            case None => (newComm, newHops)
+          }
+          if (batchId % snapshotEvery == 0) {
+            // compaction: materialize the full current verdicts so the
+            // fold never reads more than snapshotEvery - 1 deltas
+            val (sc, sh) = sub match {
               case Some((affected, subComm, subHops)) =>
                 splice(prior.get, affected, subComm, subHops)
-              case None => fullLabels(edges, lpaIters, bfsRounds, srcMod)
-            }
-            sinkPart(communities, "communities")
-            sinkPart(hops, "hops")
-          } else {
-            // delta mode: the new labels cover the affected subgraph
-            // (incremental) or everything (full fallback); either way the
-            // emitted delta is the payload-diff against the prior fold —
-            // unaffected docs are label-identical by the component
-            // decomposition, so diffing the sub-run IS the full diff
-            val (newComm, newHops) = sub match {
-              case Some((_, subComm, subHops)) => (subComm, subHops)
-              case None => fullLabels(edges, lpaIters, bfsRounds, srcMod)
-            }
-            val (dComm, dHops) = prior match {
-              case Some((pc, ph)) =>
-                (changedRows(newComm, pc, Seq("community", "converged")),
-                  changedRows(newHops, ph, Seq("hops", "converged")))
               case None => (newComm, newHops)
             }
-            if (batchId % snapshotEvery == 0) {
-              // compaction: materialize the full current verdicts so the
-              // fold never reads more than snapshotEvery - 1 deltas
-              val (sc, sh) = sub match {
-                case Some((affected, subComm, subHops)) =>
-                  splice(prior.get, affected, subComm, subHops)
-                case None => (newComm, newHops)
-              }
-              sinkPart(sc, "communities")
-              sinkPart(sh, "hops")
-            }
-            sinkPart(dComm, "communities_delta")
-            sinkPart(dHops, "hops_delta")
+            StreamGuards.writeOwned(sc, batchId, s"$outDir/communities")
+            StreamGuards.writeOwned(sh, batchId, s"$outDir/hops")
           }
-        } finally Caches.releaseAll(spark) // the kernels persist their loop frames
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+          StreamGuards.writeOwned(dComm, batchId, s"$outDir/communities_delta")
+          StreamGuards.writeOwned(dHops, batchId, s"$outDir/hops_delta")
+        }
+      } finally Caches.releaseAll(spark) // the kernels persist their loop frames
+    }
   }
 }

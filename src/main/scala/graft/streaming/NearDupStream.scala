@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.llm.TextOps
 
@@ -135,35 +135,17 @@ object NearDupStream {
       .select(col("doc_id"),
         col("m.dup_of").as("dup_of"), col("m.est_j").as("est_j"))
 
-  /** Landing-dir JSONL drops → per-doc near-dup verdicts, one batch_id
-    * partition per trigger with dynamic overwrite (replays replace
-    * themselves — same idempotent-sink contract as [[CurationStream]]). */
+  /** Landing-dir JSONL drops → per-doc near-dup verdicts, one owned
+    * batch_id partition per trigger ([[StreamGuards.writeOwned]]). */
   def start(
       spark: SparkSession, landingDir: String, outDir: String,
       checkpointDir: String, shingleN: Int = 3, numHashes: Int = 32,
       rowsPerBand: Int = 4, minEstJ: Double = 0.5): StreamingQuery = {
-    // a fresh checkpoint over an existing verdict sink would restart
-    // batch ids (and the band-bucket state) at 0 and clobber batch_id=0
-    StreamGuards.requireStoreOwnership(spark, checkpointDir, outDir,
-      "NearDupStream verdict sink")
-    val stream = spark.readStream
-      .schema(CurationStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
+    val stream = StreamGuards.landing(spark, CurationStream.docSchema, "json", landingDir)
       .select(col("doc_id"), col("text"))
-    tagStream(stream, shingleN, numHashes, rowsPerBand, minEstJ).toDF()
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        reduceHits(batch.toDF())
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamGuards.drain(tagStream(stream, shingleN, numHashes, rowsPerBand, minEstJ).toDF(),
+        OutputMode.Update(), checkpointDir, outDir -> "NearDupStream verdict sink") {
+      (batch, batchId) => StreamGuards.writeOwned(reduceHits(batch), batchId, outDir)
+    }
   }
 }

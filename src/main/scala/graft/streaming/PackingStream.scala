@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.llm.{Dedup, Sampling, TextOps}
 
@@ -87,7 +87,10 @@ object PackingStream {
       }
   }
 
-  /** Landing-dir JSONL drops → incrementally packed parquet. */
+  /** Landing-dir JSONL drops → incrementally packed parquet, one owned
+    * batch_id partition per trigger: the state store rolls back with a
+    * replayed batch, so a replay replaces itself instead of double-advancing
+    * any shard's token cursor. */
   def start(
       spark: SparkSession,
       landingDir: String,
@@ -95,35 +98,12 @@ object PackingStream {
       checkpointDir: String,
       ctxTokens: Long = 512L, shards: Int = 8): StreamingQuery = {
     import spark.implicits._
-    // a fresh checkpoint over an existing packed sink would restart
-    // batch ids (and every shard's token cursor) at 0 and clobber batch_id=0
-    StreamGuards.requireStoreOwnership(spark, checkpointDir, outDir,
-      "PackingStream packed sink")
-    val stream = spark.readStream
-      .schema(CurationStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
+    val stream = StreamGuards.landing(spark, CurationStream.docSchema, "json", landingDir)
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
-    pack(stream, ctxTokens, shards).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[PackedDoc], batchId: Long) =>
-        writeBatch(batch, batchId, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamGuards.drain(pack(stream, ctxTokens, shards),
+        OutputMode.Update(), checkpointDir, outDir -> "PackingStream packed sink") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, outDir)
+    }
   }
-
-  /** Idempotent sink (same contract as [[CurationStream.writeBatch]]):
-    * each batch owns its batch_id partition with dynamic overwrite, and the
-    * state store rolls back with a replayed batch, so replays replace
-    * themselves instead of double-advancing any shard's token cursor. */
-  private[streaming] def writeBatch(
-      batch: Dataset[PackedDoc], batchId: Long, outDir: String): Unit =
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(outDir)
 }

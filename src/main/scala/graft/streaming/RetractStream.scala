@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.types.StructType
 
 /** One changelog row: insert (+1) or retraction (−1) of value `v` under
   * aggregation key `key` (dcnt carries the signed count, so a compacted
@@ -90,9 +91,9 @@ object RetractStream {
         TimeMode.None(), OutputMode.Update())
   }
 
-  /** Changelog JSON drops in `landingDir` → maintained aggregates appended
-    * to `outDir` parquet with their micro-batch id (the LAST batch per key
-    * is the current snapshot). One file per trigger so state genuinely
+  /** Changelog JSON drops in `landingDir` → maintained aggregates, one
+    * owned batch_id partition per trigger at `outDir` (the LAST batch per
+    * key is the current snapshot). One file per trigger so state genuinely
     * carries across micro-batches. */
   def start(
       spark: SparkSession,
@@ -100,24 +101,12 @@ object RetractStream {
       outDir: String,
       checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    // append sink: no clobber, but a fresh checkpoint restarts batch ids
-    // AND the histogram state at zero — new snapshots would collide with
-    // the old lineage's ids under the max-batch_id-per-key read contract
-    StreamGuards.requireAppendSinkOwnership(spark, checkpointDir, outDir,
-      "RetractStream snapshot sink")
-    val stream = spark.readStream
-      .schema("key STRING, v LONG, dcnt LONG")
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
+    val stream = StreamGuards.landing(spark,
+        StructType.fromDDL("key STRING, v LONG, dcnt LONG"), "json", landingDir)
       .as[ChangeRow]
-    aggs(stream).writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[RetractAgg], batchId: Long) =>
-        batch.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("append").parquet(outDir): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamGuards.drain(aggs(stream), OutputMode.Update(), checkpointDir,
+        outDir -> "RetractStream snapshot sink") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, outDir)
+    }
   }
 }

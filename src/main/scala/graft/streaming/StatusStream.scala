@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.sources.{Schemas, Store}
 
@@ -22,16 +22,16 @@ import graft.sources.{Schemas, Store}
   */
 object StatusStream {
 
-  /** Start the ingest stream over `landingDir`. Returns the running query;
-    * with `Trigger.AvailableNow` it drains the backlog and stops — the
-    * replayable-test and catch-up mode. */
+  /** Start the ingest stream over `landingDir`. It drains the backlog and
+    * stops (`Trigger.AvailableNow`) — the replayable-test and catch-up mode.
+    * The sink is the store's own layout, not a batch_id partition, so no
+    * dir is checkpoint-owned. */
   def start(
       spark: SparkSession,
       landingDir: String,
       store: Store,
       checkpointDir: String,
-      dedupWithinWatermark: Boolean = false,
-      availableNow: Boolean = true): StreamingQuery = {
+      dedupWithinWatermark: Boolean = false): StreamingQuery = {
     val raw = spark.readStream
       .schema(Schemas.stationStatus)
       .option("maxFilesPerTrigger", 32)
@@ -41,9 +41,8 @@ object StatusStream {
         raw.withWatermark("scraped_at", "30 minutes")
           .dropDuplicatesWithinWatermark("station_id", "scraped_at")
       else raw
-    val writer = cleaned.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => store.appendStatus(batch) }
-      .option("checkpointLocation", checkpointDir)
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    StreamGuards.drain(cleaned, OutputMode.Append(), checkpointDir) {
+      (batch, _) => store.appendStatus(batch)
+    }
   }
 }

@@ -1,22 +1,28 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
-/** Start-time ownership guards shared by every stream that keeps a
-  * DURABLE batch_id-stamped sink or store — both the read-back stores
-  * (journal / ledger / summary log: [[GraphStream]], [[ContaminationStream]],
-  * [[DriftStream]], [[FlowStream]]) and the write-only accumulating sinks
-  * ([[CurationStream]], [[NearDupStream]], [[PackingStream]],
-  * [[BatchingStream]], [[ContamStream]], [[ChainStream]]'s tiers,
-  * [[RetractStream]], [[VectorStream]]).
+/** How every durable stream in this package reads, writes and starts.
   *
-  * The hazard: foreachBatch batch ids are PER-CHECKPOINT. If a stream is
-  * restarted with a fresh (or deleted) checkpoint over an existing store —
-  * a common ops move — batch ids restart at 0 and the new batch 0
-  * silently dynamic-overwrites the old `batch_id=0` partition; the next
-  * rebuild-from-journal then permanently drops the lost rows with no
-  * error. A crash REPLAY is different and legitimate: the checkpoint's
+  *  - [[landing]] is the one-file-per-trigger landing source the stateful
+  *    specs rely on (state genuinely carries across micro-batches).
+  *  - [[writeOwned]] is the one durable sink shape: each micro-batch owns
+  *    its `batch_id` partition, written with dynamic overwrite, so a
+  *    replayed trigger replaces itself.
+  *  - [[drain]] is the one start: it refuses a foreign checkpoint for every
+  *    owned dir, then drains the backlog with `Trigger.AvailableNow`.
+  *
+  * The ownership hazard: foreachBatch batch ids are PER-CHECKPOINT. If a
+  * stream is restarted with a fresh (or deleted) checkpoint over an
+  * existing store — a common ops move — batch ids restart at 0 and the new
+  * batch 0 silently dynamic-overwrites the old `batch_id=0` partition; the
+  * next rebuild-from-journal then permanently drops the lost rows with no
+  * error, and a "max batch_id per key" reader silently mixes two state
+  * lineages. A crash REPLAY is different and legitimate: the checkpoint's
   * offsets log already names the batch (offsets/N is written before
   * foreachBatch runs batch N), so replay overwrites a partition its own
   * checkpoint owns.
@@ -24,24 +30,54 @@ import org.apache.spark.sql.SparkSession
   * The guard distinguishes exactly those two cases: every `batch_id=`
   * partition in the store must be named by the checkpoint's offsets log.
   * A store partition beyond the log's max batch means the store was
-  * written by a DIFFERENT checkpoint — refuse loudly at start() instead
-  * of corrupting the lake on the first trigger. Seed partitions at
-  * negative ids (DriftStream's batch_id=-1 baseline) are exempt: they are
+  * written by a DIFFERENT checkpoint — refuse loudly at start instead of
+  * corrupting the lake on the first trigger. Seed partitions at negative
+  * ids (DriftStream's batch_id=-1 baseline) are exempt: they are
   * re-derived idempotently at every (re)start, not owned by any batch.
-  *
-  * Sink-shape variants of the same hazard, same refusal discipline:
-  *  - append sinks carrying a `batch_id` COLUMN ([[RetractStream]],
-  *    [[VectorStream]]'s occupancy leg) never lose rows to an overwrite,
-  *    but their read contract is "max batch_id per key wins" — restarted
-  *    ids collide with old ones AND the fresh checkpoint resets the
-  *    stateful counters, so old-world and new-world snapshots become
-  *    indistinguishable in one dir ([[requireAppendSinkOwnership]]);
-  *  - exactly-once parquet FILE sinks ([[VectorStream]]'s assign leg)
-  *    keep a `_spark_metadata` log in the OUTPUT dir: a fresh checkpoint
-  *    finds batch N already committed there and SILENTLY SKIPS writing it
-  *    — data loss with no error ([[requireFileSinkOwnership]]).
   */
 object StreamGuards {
+
+  /** Landing-dir file source reading ONE file per trigger. */
+  def landing(spark: SparkSession, schema: StructType, format: String,
+      dir: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .format(format).load(dir)
+
+  /** The owned-partition sink: `df` stamped with `batchId` and written
+    * into its own `batch_id` partition of `dir` with dynamic overwrite.
+    *
+    * foreachBatch is at-least-once: a crash between the sink write and the
+    * checkpoint commit re-runs the batch. The state store rolls back with
+    * the replayed batch (a stateful operator re-emits the same rows), and
+    * the rewrite REPLACES the batch's own partition instead of appending
+    * duplicates — so a replay is a no-op end to end, and a cross-restart
+    * guarantee (first-seen dedup, a shard's token cursor) survives it.
+    * Readers see `batch_id` as a column; "max batch_id per key" reads the
+    * current snapshot. */
+  def writeOwned(df: Dataset[_], batchId: Long, dir: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(dir)
+
+  /** Start `ds` through `body` against `checkpointDir`, draining what is
+    * available and stopping. Refuses first, for each `(dir, what)` in
+    * `owned`, if `dir` holds batch partitions the checkpoint never logged
+    * ([[requireStoreOwnership]]). `outputMode` is the operator's: Update
+    * for the stateful streams, Append for the stateless ones. */
+  def drain[T](ds: Dataset[T], outputMode: OutputMode, checkpointDir: String,
+      owned: (String, String)*)(body: (Dataset[T], Long) => Unit): StreamingQuery = {
+    owned.foreach { case (dir, what) =>
+      requireStoreOwnership(ds.sparkSession, checkpointDir, dir, what)
+    }
+    ds.writeStream
+      .outputMode(outputMode)
+      .foreachBatch(body)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
 
   /** Max batch_id among `batch_id=` partitions under `storeDir`, or None
     * if the store doesn't exist / has none. Negative (seed) ids ignored. */
@@ -74,8 +110,9 @@ object StreamGuards {
   }
 
   /** Refuse to start a stream whose durable store holds batch partitions
-    * its checkpoint never logged. Call from start() BEFORE the stream is
-    * created, once per durable store the stream owns. */
+    * its checkpoint never logged. [[drain]] calls it for every owned dir;
+    * call it directly only where a start writes into the store before the
+    * stream exists. */
   def requireStoreOwnership(
       spark: SparkSession, checkpointDir: String, storeDir: String,
       what: String): Unit = {
@@ -90,73 +127,6 @@ object StreamGuards {
           "partitions, permanently losing their rows at the next " +
           "rebuild-from-journal. Restore the original checkpoint, or " +
           "explicitly move/delete the store to start fresh.")
-    }
-  }
-
-  /** Append-sink variant: the sink stamps a `batch_id` COLUMN (no
-    * partition dirs), so ownership is checked against max(batch_id) read
-    * from the sink itself — a one-off column-pruned scan of one long
-    * column at start(), not a per-trigger cost. An append sink never
-    * loses rows to a clobber, but a fresh checkpoint restarts BOTH the
-    * batch ids and the stream's stateful counters at zero, so new-world
-    * snapshots land under ids the old world already used and the sink's
-    * "max batch_id per key is current" read contract silently selects
-    * across two unrelated state lineages. */
-  def requireAppendSinkOwnership(
-      spark: SparkSession, checkpointDir: String, sinkDir: String,
-      what: String): Unit = {
-    val p = new Path(sinkDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val mj = scala.util.Try(
-        spark.read.parquet(sinkDir)
-          .agg(org.apache.spark.sql.functions.max("batch_id")).head())
-        .toOption.filterNot(_.isNullAt(0)).map(_.getLong(0))
-      mj.foreach { m =>
-        val mo = maxOffsetBatch(spark, checkpointDir)
-        require(mo.exists(_ >= m),
-          s"$what: $sinkDir already holds rows up to batch_id=$m but " +
-            s"checkpoint $checkpointDir has ${mo.fold(
-              "no offsets (fresh checkpoint)")(o => s"max logged batch $o")} " +
-            "— those rows belong to a DIFFERENT checkpoint. Starting would " +
-            "restart batch ids (and the stream's keyed state) at zero, so " +
-            "new snapshots would collide with the old lineage's ids and " +
-            "the max-batch_id-per-key read contract would silently mix the " +
-            "two. Restore the original checkpoint, or explicitly " +
-            "move/delete the sink to start fresh.")
-      }
-    }
-  }
-
-  /** Exactly-once parquet FILE-sink variant: the sink's `_spark_metadata`
-    * commit log (inside the OUTPUT dir) is per-checkpoint state. On a
-    * fresh checkpoint, batch N finds itself already committed in the old
-    * log and the FileStreamSink SKIPS the write with only an info-level
-    * log line — silent data loss, worse than the clobber case because
-    * nothing is even overwritten. Ownership check: every batch the
-    * metadata log has committed must be named by the checkpoint's offsets
-    * log. Compacted log files (`N.compact`) count as batch N. */
-  def requireFileSinkOwnership(
-      spark: SparkSession, checkpointDir: String, sinkDir: String,
-      what: String): Unit = {
-    val p = new Path(sinkDir, "_spark_metadata")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val ids = fs.listStatus(p).toSeq.flatMap(s => scala.util.Try(
-        s.getPath.getName.stripSuffix(".compact").toLong).toOption)
-      if (ids.nonEmpty) {
-        val mj = ids.max
-        val mo = maxOffsetBatch(spark, checkpointDir)
-        require(mo.exists(_ >= mj),
-          s"$what: $sinkDir/_spark_metadata has committed batch $mj but " +
-            s"checkpoint $checkpointDir has ${mo.fold(
-              "no offsets (fresh checkpoint)")(o => s"max logged batch $o")} " +
-            "— the sink's commit log belongs to a DIFFERENT checkpoint. " +
-            "Starting would replay batch ids the log already holds and the " +
-            "file sink would SILENTLY SKIP writing them (data loss with no " +
-            "error). Restore the original checkpoint, or explicitly " +
-            "move/delete the sink to start fresh.")
-      }
     }
   }
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.types.StructType
 
 import graft.llm.{Qv, Similarity, VecSumAgg}
 
@@ -100,11 +101,14 @@ object VectorStream {
     }
   }
 
-  /** Vector JSON drops in `landingDir` → frozen-centroid assignment
-    * (appended to `outDir/assign`) → per-cell occupancy snapshots with
-    * their micro-batch id (appended to `outDir/cells`; the LAST batch per
-    * cell is current). One file per trigger so occupancy state genuinely
-    * carries across micro-batches. */
+  /** Landing schema for vector JSON drops. */
+  private val vecSchema = StructType.fromDDL("vec_id LONG, embedding ARRAY<DOUBLE>")
+
+  /** Vector JSON drops in `landingDir` → frozen-centroid assignment →
+    * per-cell occupancy snapshots, one owned batch_id partition per
+    * trigger at `outDir/cells` (the LAST batch per cell is current). One
+    * file per trigger so occupancy state genuinely carries across
+    * micro-batches. */
   def start(
       spark: SparkSession,
       landingDir: String,
@@ -112,57 +116,35 @@ object VectorStream {
       outDir: String,
       checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    // append sink: a fresh checkpoint restarts batch ids AND the
-    // occupancy counters at zero — old and new count lineages would mix
-    // under the max-batch_id-per-cell read contract
-    StreamGuards.requireAppendSinkOwnership(spark, s"$checkpointDir/cells",
-      s"$outDir/cells", "VectorStream occupancy sink")
     val cents = frozenCentroids(train, "label", "embedding")
-    val stream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
-    val assigned = assign(stream.toDF(), "vec_id", "embedding", cents)
-    assigned
+    val stream = StreamGuards.landing(spark, vecSchema, "json", landingDir)
+    val counts = assign(stream, "vec_id", "embedding", cents)
       .groupByKey(_.cell)
       .transformWithState(new CellCounter, TimeMode.None(), OutputMode.Update())
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[CellCount], batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$outDir/cells"): Unit
-      }
-      .option("checkpointLocation", s"$checkpointDir/cells")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val cellsDir = s"$outDir/cells"
+    StreamGuards.drain(counts, OutputMode.Update(), s"$checkpointDir/cells",
+        cellsDir -> "VectorStream occupancy sink") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, cellsDir)
+    }
   }
 
   /** Companion assignment sink (stateless leg): same drops → the
-    * per-vector cell assignments as parquet. Separate query so the spec
-    * can drive and compare each leg independently. */
+    * per-vector cell assignments, one owned batch_id partition per trigger
+    * at `outDir/assign`. Separate query so the spec can drive and compare
+    * each leg independently. */
   def startAssign(
       spark: SparkSession,
       landingDir: String,
       train: DataFrame,
       outDir: String,
       checkpointDir: String): StreamingQuery = {
-    // exactly-once file sink: its _spark_metadata commit log is
-    // per-checkpoint state — a fresh checkpoint would find its batch ids
-    // already committed and SILENTLY SKIP writing them (data loss)
-    StreamGuards.requireFileSinkOwnership(spark, s"$checkpointDir/assign",
-      s"$outDir/assign", "VectorStream assignment sink")
     val cents = frozenCentroids(train, "label", "embedding")
-    val stream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
-      .option("maxFilesPerTrigger", 1)
-      .json(landingDir)
-    assign(stream.toDF(), "vec_id", "embedding", cents)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .option("path", s"$outDir/assign")
-      .option("checkpointLocation", s"$checkpointDir/assign")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val stream = StreamGuards.landing(spark, vecSchema, "json", landingDir)
+    val assignDir = s"$outDir/assign"
+    StreamGuards.drain(assign(stream, "vec_id", "embedding", cents),
+        OutputMode.Append(), s"$checkpointDir/assign",
+        assignDir -> "VectorStream assignment sink") {
+      (batch, batchId) => StreamGuards.writeOwned(batch, batchId, assignDir)
+    }
   }
 }

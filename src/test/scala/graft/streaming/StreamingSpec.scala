@@ -482,14 +482,15 @@ class StreamingSpec extends SparkSpec {
     assert(once == twice && once.nonEmpty)
     assert(spark.read.parquet(dDir).count() == 2) // deltas not duplicated
 
-    // CurationStream: same replay pattern
+    // the owned-partition sink every other stream writes through: same
+    // replay pattern
     val doc = CuratedDoc(1L, "en", "src0",
       "some reasonable document text with enough tokens to pass the window " +
         "quality filter because it keeps going and going with variety",
       "fp1", 20, 0.9)
     val cDir = dir.resolve("c").toString
-    CurationStream.writeBatch(Seq(doc).toDS(), 3L, cDir)
-    CurationStream.writeBatch(Seq(doc).toDS(), 3L, cDir) // replay
+    StreamGuards.writeOwned(Seq(doc).toDS(), 3L, cDir)
+    StreamGuards.writeOwned(Seq(doc).toDS(), 3L, cDir) // replay
     assert(spark.read.parquet(cDir).count() == 1)
   }
 
